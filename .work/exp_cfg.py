@@ -19,7 +19,7 @@ from distributed_web_scrapper_and_crawler_c__spark.sources import sitegen
 spec = sitegen.SiteSpec(n_books=3000, n_categories=14, books_per_page=250)
 pages = sitegen.pages_dataframe(spark, spec, slices=32).persist(); pages.count()
 t0=time.time()
-eng = CrawlEngine(spark, pages, use_bloom=True, num_partitions=32)
+eng = CrawlEngine(spark, pages, num_partitions=32)
 eng.run("/catalogue/page-1.html")
 w = time.time()-t0
 print(f"RESULT aqe={aqe} shuf={sp} wall={w:.2f}s pages={eng.pages_crawled} rounds={eng.round_num} items={eng.items_count}")

@@ -26,7 +26,7 @@ GATE = int(os.environ.get("FAST_GATE", "4096"))
 
 
 def drain(spark, pages, gate):
-    eng = CrawlEngine(spark, pages, use_bloom=True, num_partitions=32,
+    eng = CrawlEngine(spark, pages, num_partitions=32,
                       fast_round_rows=gate)
     t0 = time.time()
     eng.run("/catalogue/page-1.html")

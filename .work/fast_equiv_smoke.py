@@ -29,7 +29,7 @@ def crawl(fast, **kw):
     return dict(log=list(eng.dequeue_log), items=items, seen=seen, fr=fr, met=met,
                 wall=w, rounds=eng.round_num, n=eng.pages_crawled)
 
-for kw in [dict(), dict(host_budget=3), dict(max_pages=37), dict(min_delay=2, host_budget=2), dict(use_bloom=False)]:
+for kw in [dict(), dict(host_budget=3), dict(max_pages=37), dict(min_delay=2, host_budget=2)]:
     a = crawl(0, **kw)      # distributed
     b = crawl(10**9, **kw)  # force fast everywhere
     keys = ["log","items","seen","fr","rounds","n"]

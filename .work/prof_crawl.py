@@ -16,7 +16,7 @@ pages.count()
 st = spark.sparkContext.statusTracker()
 j0 = max(st.getJobIdsForGroup() or [0])
 t0 = time.time()
-eng = CrawlEngine(spark, pages, use_bloom=True, num_partitions=cpus)
+eng = CrawlEngine(spark, pages, num_partitions=cpus)
 eng.run("/catalogue/page-1.html")
 wall = time.time() - t0
 jobs_total = len(st.getJobIdsForGroup() or [])

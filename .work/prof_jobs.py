@@ -20,7 +20,7 @@ from distributed_web_scrapper_and_crawler_c__spark.sources import sitegen
 spec = sitegen.SiteSpec(n_books=3000, n_categories=14, books_per_page=250)
 pages = sitegen.pages_dataframe(spark, spec, slices=32).persist(); pages.count()
 t0=time.time()
-eng = CrawlEngine(spark, pages, use_bloom=True, num_partitions=32)
+eng = CrawlEngine(spark, pages, num_partitions=32)
 eng.run("/catalogue/page-1.html")
 print("wall", round(time.time()-t0,2), "rounds", eng.round_num)
 app_id = spark.sparkContext.applicationId

@@ -7,7 +7,7 @@ from distributed_web_scrapper_and_crawler_c__spark.plans.frontier import CrawlEn
 from distributed_web_scrapper_and_crawler_c__spark.sources import sitegen
 spec = sitegen.SiteSpec(n_books=300, n_categories=14, books_per_page=250)
 pages = sitegen.pages_dataframe(spark, spec, slices=32).persist(); pages.count()
-eng = CrawlEngine(spark, pages, use_bloom=True, num_partitions=32)
+eng = CrawlEngine(spark, pages, num_partitions=32)
 eng.run("/catalogue/page-1.html")
 print("rounds", eng.round_num)
 print("item part npart:", [p.rdd.getNumPartitions() for p in eng._item_parts])

@@ -131,7 +131,7 @@ def crawl_bench(spark, n_books: int) -> dict:
     n_pages = pages.count()  # materialize before the clock starts
 
     t0 = time.time()
-    eng = CrawlEngine(spark, pages, use_bloom=True, num_partitions=cpus)
+    eng = CrawlEngine(spark, pages, num_partitions=cpus)
     eng.run("/catalogue/page-1.html")
     wall = time.time() - t0
     pages.unpersist()

@@ -96,8 +96,7 @@ def main() -> None:
         for i in range(args.repeats):
             spark.sparkContext.setJobDescription(f"crawl#{i}")
             t0 = time.time()
-            eng = CrawlEngine(spark, pages, use_bloom=True,
-                              num_partitions=cpus)
+            eng = CrawlEngine(spark, pages, num_partitions=cpus)
             eng.run("/catalogue/page-1.html")
             walls.append(round(time.time() - t0, 3))
             rounds = [

@@ -237,7 +237,7 @@ def worker(cores: int) -> None:
     # shard threshold forces the sharded cogroup layout at this job size.
     seen_filter = os.environ.get("SPARK_SCALING_SEEN_FILTER", "bloom")
     shard_thr = int(os.environ.get("SPARK_SCALING_SHARD_THRESHOLD", "5000000"))
-    eng = CrawlEngine(spark, pages, use_bloom=True,
+    eng = CrawlEngine(spark, pages,
                       num_partitions=SHUFFLE_PARTS or cores,
                       broadcast_threshold=bcast, pin_storage_level=pin_level,
                       seen_filter=seen_filter,

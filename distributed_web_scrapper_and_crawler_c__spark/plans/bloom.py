@@ -1,4 +1,4 @@
-"""Bloom-filter URL-seen pre-filter.
+"""Bloom-filter URL-seen pre-filter family (see plans/seen_filter).
 
 The exact seen-set is an anti-join against the ``seen`` table; at 10^10
 canonical URLs that join shuffles both sides every round. The Bloom filter
@@ -7,25 +7,18 @@ new* and skip the exact join entirely; only maybe-seen candidates (a small
 fraction: true dups + false positives) go through the exact anti-join, so
 exactness is preserved (false negatives are impossible).
 
-Build path (north-star shape): the two 64-bit probe bases are computed
-JVM-side with ``xxhash64`` (vectorized, no Python in the hashing hot path);
-per-partition bitmaps are OR-merged — via RDD ``treeAggregate`` — and the
-merged bitmap is broadcast for the probe UDF, which evaluates k double-hash
-probes with numpy over whole Arrow batches.
+Kernels: the two 64-bit probe bases are computed JVM-side with
+``xxhash64`` (vectorized, no Python in the hashing hot path); k=7 probes by
+double hashing, set and tested with numpy over whole Arrow batches. The
+full driver-held build is distributed: per-partition bitmaps OR-merged via
+RDD ``treeAggregate``.
 
 Sizing: m bits for n keys at k=7 gives fpr ≈ 0.82^(m/n·ln2·...); the engine
-sizes m = 16·n rounded to a power of two (fpr ≈ 0.0043). At 10^10 URLs that
-is 20 GB — far past broadcast range — so above a size threshold the engine
-switches to the SHARDED layout implemented below: the key space is split by
-an independent hash into S shards, each shard owns its own bitmap row in a
-``(shard int, bitmap binary)`` DataFrame that lives distributed (pinned per
-round, checkpointable like any other state table), and the probe is a
-``cogroup(applyInPandas)`` on the shard key — every task receives one
-shard's candidate rows plus that shard's bitmap, so no bitmap is ever
-broadcast and per-task memory is m/S regardless of total filter size.
-Candidate rows cross into Python once per round as Arrow batches (the same
-transfer the probe output needs anyway); all hashing stays JVM-side
-xxhash64.
+sizes m = 32·n rounded to a power of two and rebuilds once n passes m/16
+(fpr ≤ 0.0043). At 10^10 URLs that is 20 GB — far past broadcast range — so
+above a size threshold the seen filter switches to its sharded layout: one
+bitmap row per shard in a ``(shard int, bitmap binary)`` DataFrame, m bits
+per shard, probed by a cogroup so no bitmap is ever broadcast.
 """
 
 from __future__ import annotations
@@ -35,7 +28,8 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from . import seen_filter as SF
 
 K_PROBES = 7
 
@@ -52,6 +46,35 @@ def _probe_bits(h1: np.ndarray, h2: np.ndarray, m_bits: int) -> np.ndarray:
     ) % np.uint64(m_bits)
 
 
+class Bloom(SF.Family):
+    name = "bloom"
+    seeds = ((), (1,))
+    dtype = np.uint8
+    state_col = "bitmap"
+
+    def shape(self, size: int) -> tuple[int, ...]:
+        return (size // 8,)
+
+    def probe(self, state: np.ndarray, ha, hb) -> np.ndarray:
+        bits = _probe_bits(ha, hb, state.size * 8)
+        masks = (1 << (bits & 7)).astype(np.uint8)
+        return ((state[bits >> 3] & masks) == masks).all(axis=1)
+
+    def insert(self, state: np.ndarray, ha, hb) -> None:
+        bits = _probe_bits(ha, hb, state.size * 8).ravel()
+        np.bitwise_or.at(state, bits >> 3, (1 << (bits & 7)).astype(np.uint8))
+
+    def size_for(self, n_keys: int, n_shards: int) -> int:
+        return _next_pow2(n_keys * 32 // n_shards)
+
+    def full(self, n_keys: int, size: int, n_shards: int) -> bool:
+        return n_keys * 16 > size * n_shards
+
+    def build_local(self, df: DataFrame, col: str, size: int) -> np.ndarray:
+        bm, _ = build_bloom(df, col, size)
+        return np.frombuffer(bm, dtype=np.uint8).copy()
+
+
 def build_bloom(df: DataFrame, col: str, m_bits: int | None = None) -> tuple[bytes, int]:
     """Build a bloom bitmap over ``df[col]`` (distinct not required).
 
@@ -60,22 +83,13 @@ def build_bloom(df: DataFrame, col: str, m_bits: int | None = None) -> tuple[byt
     """
     m = m_bits or _next_pow2(max(1, df.count()) * 16)
 
-    hashed = df.select(
-        F.xxhash64(F.col(col)).alias("h1"),
-        F.xxhash64(F.col(col), F.lit(1)).alias("h2"),
-    )
+    bloom = Bloom()
+    hashed = df.select(*SF.hash_cols(bloom, col))
 
     def to_bitmap(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        bm = np.zeros(m // 8, dtype=np.uint8)
+        bm = bloom.new(m)
         for pdf in pdf_iter:
-            if len(pdf) == 0:
-                continue
-            bits = _probe_bits(
-                pdf["h1"].to_numpy().astype(np.int64).view(np.uint64),
-                pdf["h2"].to_numpy().astype(np.int64).view(np.uint64),
-                m,
-            ).ravel()
-            np.bitwise_or.at(bm, bits >> 3, (1 << (bits & 7)).astype(np.uint8))
+            bloom.insert(bm, pdf["_ha"].to_numpy(), pdf["_hb"].to_numpy())
         yield pd.DataFrame({"bitmap": [bm.tobytes()]})
 
     parts = hashed.mapInPandas(to_bitmap, "bitmap binary").rdd.map(
@@ -89,149 +103,9 @@ def build_bloom(df: DataFrame, col: str, m_bits: int | None = None) -> tuple[byt
     return merged.tobytes(), m
 
 
-def bloom_bits_local(df: DataFrame, col: str, m_bits: int) -> np.ndarray:
-    """Driver-side bitmap for SMALL increments: collect only the two
-    xxhash64 probe bases (16 bytes/row, Arrow transfer) and set bits with
-    numpy locally — one tiny job, no RDD/treeAggregate machinery. The
-    distributed ``build_bloom`` remains the path for large inputs."""
-    pdf = df.select(
-        F.xxhash64(F.col(col)).alias("h1"),
-        F.xxhash64(F.col(col), F.lit(1)).alias("h2"),
-    ).toPandas()
-    bm = np.zeros(m_bits // 8, dtype=np.uint8)
-    if len(pdf):
-        bits = _probe_bits(
-            pdf["h1"].to_numpy().astype(np.int64).view(np.uint64),
-            pdf["h2"].to_numpy().astype(np.int64).view(np.uint64),
-            m_bits,
-        ).ravel()
-        np.bitwise_or.at(bm, bits >> 3, (1 << (bits & 7)).astype(np.uint8))
-    return bm
-
-
-# ---------------------------------------------------------------------------
-# sharded layout (the ≥10^9-keys path): bitmap state is a DataFrame,
-# probe is a cogroup — nothing is broadcast, per-task memory is m/S.
-# ---------------------------------------------------------------------------
-
-N_SHARDS = 64
-SHARD_SCHEMA = "shard int, bitmap binary"
-
-
-def shard_col(col: str, n_shards: int = N_SHARDS):
-    """Shard key from an independent xxhash64 seed (2) so shard placement is
-    uncorrelated with the probe bases (seeds 0 and 1)."""
-    return F.pmod(F.xxhash64(F.col(col), F.lit(2)), F.lit(n_shards)).cast("int")
-
-
-def _set_bits(bm: np.ndarray, h1: np.ndarray, h2: np.ndarray, m_bits: int) -> None:
-    bits = _probe_bits(h1, h2, m_bits).ravel()
-    np.bitwise_or.at(bm, bits >> 3, (1 << (bits & 7)).astype(np.uint8))
-
-
-def build_shard_bitmaps(
-    df: DataFrame, col: str, m_bits: int, n_shards: int = N_SHARDS
-) -> DataFrame:
-    """(shard, bitmap) rows over ``df[col]``; ``m_bits`` is PER-SHARD bits.
-    One shuffle on the shard key; each group builds its bitmap with numpy.
-    Shards with no keys emit no row (probe treats a missing shard as
-    all-definitely-new)."""
-    hashed = df.select(
-        shard_col(col, n_shards).alias("shard"),
-        F.xxhash64(F.col(col)).alias("h1"),
-        F.xxhash64(F.col(col), F.lit(1)).alias("h2"),
-    )
-
-    def mk(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        bm = np.zeros(m_bits // 8, dtype=np.uint8)
-        _set_bits(
-            bm,
-            pdf["h1"].to_numpy().astype(np.int64).view(np.uint64),
-            pdf["h2"].to_numpy().astype(np.int64).view(np.uint64),
-            m_bits,
-        )
-        return pd.DataFrame({"shard": [int(key[0])], "bitmap": [bm.tobytes()]})
-
-    return hashed.groupBy("shard").applyInPandas(mk, SHARD_SCHEMA)
-
-
-def or_merge_shard_bitmaps(a: DataFrame, b: DataFrame) -> DataFrame:
-    """OR-merge two (shard, bitmap) tables; one shuffle on the shard key.
-    (On a cluster this is the treeAggregate-per-shard merge — Spark's
-    partial aggregation runs map-side before the exchange.)"""
-
-    def merge(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        bm = None
-        for buf in pdf["bitmap"]:
-            arr = np.frombuffer(buf, dtype=np.uint8)
-            bm = arr.copy() if bm is None else np.bitwise_or(bm, arr)
-        return pd.DataFrame({"shard": [int(key[0])], "bitmap": [bm.tobytes()]})
-
-    return a.unionByName(b).groupBy("shard").applyInPandas(merge, SHARD_SCHEMA)
-
-
-def probe_sharded(
-    cand: DataFrame,
-    shards: DataFrame,
-    col: str,
-    m_bits: int,
-    n_shards: int = N_SHARDS,
-    out_col: str = "_maybe",
-) -> DataFrame:
-    """``cand`` + boolean ``out_col`` (True = possibly seen, must go to the
-    exact anti-join; False = definitely new). Implemented as a cogroup on
-    the shard key: each task sees one shard's candidates and that shard's
-    single bitmap row — no broadcast of any bitmap."""
-    keyed = cand.withColumn("_shard", shard_col(col, n_shards)).withColumn(
-        "_h1", F.xxhash64(F.col(col))
-    ).withColumn("_h2", F.xxhash64(F.col(col), F.lit(1)))
-
-    out_schema = cand.schema.add(out_col, "boolean")
-    out_cols = [f.name for f in out_schema.fields]
-
-    def probe(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if len(left) == 0:
-            return pd.DataFrame(columns=out_cols)
-        out = left.drop(columns=["_shard", "_h1", "_h2"])
-        if len(right) == 0:
-            out[out_col] = False
-            return out[out_cols]
-        bm = np.frombuffer(right["bitmap"].iloc[0], dtype=np.uint8)
-        bits = _probe_bits(
-            left["_h1"].to_numpy().astype(np.int64).view(np.uint64),
-            left["_h2"].to_numpy().astype(np.int64).view(np.uint64),
-            m_bits,
-        )
-        hit = (bm[(bits >> 3).astype(np.int64)] >> (bits & 7).astype(np.uint8)) & 1
-        out[out_col] = hit.all(axis=1)
-        return out[out_cols]
-
-    return (
-        keyed.groupBy("_shard")
-        .cogroup(shards.groupBy("shard"))
-        .applyInPandas(probe, out_schema)
-    )
-
-
 def maybe_seen_col(spark, bitmap: bytes, m_bits: int):
     """Returns a function mapping (h1_col, h2_col) → boolean Column: True if
     the key is POSSIBLY in the filter (must go to the exact anti-join),
     False only if definitely new."""
-    import pandas as pd
-
-    bc = spark.sparkContext.broadcast(np.frombuffer(bitmap, dtype=np.uint8))
-
-    @F.pandas_udf("boolean")
-    def probe(h1: pd.Series, h2: pd.Series) -> pd.Series:
-        if len(h1) == 0:
-            return pd.Series([], dtype=bool)
-        bm = bc.value
-        bits = _probe_bits(
-            h1.to_numpy().astype(np.int64).view(np.uint64),
-            h2.to_numpy().astype(np.int64).view(np.uint64),
-            m_bits,
-        )
-        hit = (bm[(bits >> 3).astype(np.int64)] >> (bits & 7).astype(np.uint8)) & 1
-        return pd.Series(hit.all(axis=1))
-
-    return probe
+    bloom = Bloom()
+    return SF.probe_udf(spark, bloom, bloom.from_bytes(bitmap, m_bits))

@@ -28,28 +28,24 @@ URL exactly once (the seen-set is distinct). Deleting a key removes one
 copy; any other key colliding on (fp, bucket pair) still has its own copy,
 so deletion can never create a false negative for a still-seen URL.
 
-Two physical layouts mirroring plans/bloom: a driver-held table broadcast
-to a pandas UDF below the shard threshold, and a sharded
-``(shard int, table binary)`` DataFrame above it, probed/updated via
-cogroup ``applyInPandas`` so no table is ever broadcast and per-task
-memory is capacity/S. All key hashing stays JVM-side ``xxhash64``; the
-Python side only does vectorized numpy over Arrow batches.
+Both layouts of plans/seen_filter apply: a driver-held table broadcast to
+the probe UDF below the shard threshold, and a sharded
+``(shard int, table binary)`` DataFrame above it. All key hashing stays
+JVM-side ``xxhash64``; the Python side only does vectorized numpy over
+Arrow batches.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from . import seen_filter as SF
 
 SLOTS = 4
 FP_SEED = 3   # xxhash64 seed for the fingerprint base
 IX_SEED = 4   # xxhash64 seed for the primary bucket index
 _ALT_MULT = np.uint64(0x5BD1E995)  # MurmurHash2 multiplier (public constant)
-
-N_SHARDS = 64
-SHARD_SCHEMA = "shard int, table binary"
 
 
 class CuckooCapacityError(RuntimeError):
@@ -70,14 +66,6 @@ def capacity(n_buckets: int) -> int:
     return n_buckets * SLOTS
 
 
-def hash_cols(col: str) -> list:
-    """The two JVM-side probe bases (fingerprint base, index base)."""
-    return [
-        F.xxhash64(F.col(col), F.lit(FP_SEED)).alias("hfp"),
-        F.xxhash64(F.col(col), F.lit(IX_SEED)).alias("hix"),
-    ]
-
-
 def _fp_i1(hfp: np.ndarray, hix: np.ndarray, n_buckets: int):
     """(fingerprint uint16 in [1,0xFFFF], primary bucket index) from the
     two signed-int64 xxhash64 bases."""
@@ -92,10 +80,6 @@ def _alt_index(fp: np.ndarray, idx: np.ndarray, n_buckets: int) -> np.ndarray:
     mask = np.uint64(n_buckets - 1)
     scr = (fp.astype(np.uint64) * _ALT_MULT) & mask
     return (idx.astype(np.uint64) ^ scr).astype(np.int64)
-
-
-def new_table(n_buckets: int) -> np.ndarray:
-    return np.zeros((n_buckets, SLOTS), dtype=np.uint16)
 
 
 def _compact_buckets(table: np.ndarray, buckets: np.ndarray) -> None:
@@ -199,211 +183,54 @@ def bulk_delete(table: np.ndarray, fp: np.ndarray, i1: np.ndarray) -> int:
     return removed
 
 
-# ---------------------------------------------------------------------------
-# driver-held layout (< shard threshold): one table, broadcast probe UDF
-# ---------------------------------------------------------------------------
+class Cuckoo(SF.Family):
+    name = "cuckoo"
+    seeds = ((FP_SEED,), (IX_SEED,))
+    dtype = np.uint16
+    state_col = "table"
+    deletes = True
+
+    def shape(self, size: int) -> tuple[int, ...]:
+        return (size, SLOTS)
+
+    def probe(self, state: np.ndarray, ha, hb) -> np.ndarray:
+        return bulk_probe(state, *_fp_i1(ha, hb, state.shape[0]))
+
+    def insert(self, state: np.ndarray, ha, hb) -> None:
+        bulk_insert(state, *_fp_i1(ha, hb, state.shape[0]))
+
+    def delete(self, state: np.ndarray, ha, hb) -> None:
+        bulk_delete(state, *_fp_i1(ha, hb, state.shape[0]))
+
+    def size_for(self, n_keys: int, n_shards: int) -> int:
+        if n_shards == 1:
+            return next_pow2_buckets(4 * n_keys)  # rebuilds rare
+        return next_pow2_buckets(max(1, 2 * n_keys // n_shards))
+
+    def full(self, n_keys: int, size: int, n_shards: int) -> bool:
+        # load would pass 0.5 of total slot capacity
+        return n_keys * 2 > capacity(size) * n_shards
+
+    def grow_size(self, n_keys: int, size: int, n_shards: int) -> int | None:
+        # unlike a bloom bitmap (which merely densifies), a cuckoo table has
+        # hard slot capacity: grow BEFORE an insert pushes the load past 0.5
+        if self.full(n_keys, size, n_shards):
+            return next_pow2_buckets(max(1, 4 * n_keys // n_shards))
+        return None
 
 
-def _collect_hashes(df: DataFrame, col: str):
-    pdf = df.select(*hash_cols(col)).toPandas()
-    return pdf["hfp"].to_numpy(), pdf["hix"].to_numpy()
+def hash_cols(col: str) -> list:
+    """The two JVM-side probe bases (fingerprint base, index base)."""
+    return SF.hash_cols(Cuckoo(), col)
 
 
 def cuckoo_local(df: DataFrame, col: str, n_buckets: int) -> np.ndarray:
-    """Driver-side table build/increment source: collect only the two
-    xxhash64 bases (16 bytes/row, Arrow transfer) and insert with numpy —
-    the same shape as ``bloom.bloom_bits_local``."""
-    table = new_table(n_buckets)
-    hfp, hix = _collect_hashes(df, col)
-    if len(hfp):
-        fp, i1 = _fp_i1(hfp, hix, n_buckets)
-        bulk_insert(table, fp, i1)
-    return table
-
-
-def insert_local(table: np.ndarray, df: DataFrame, col: str) -> None:
-    hfp, hix = _collect_hashes(df, col)
-    if len(hfp):
-        fp, i1 = _fp_i1(hfp, hix, table.shape[0])
-        bulk_insert(table, fp, i1)
-
-
-def delete_local(table: np.ndarray, df: DataFrame, col: str) -> int:
-    hfp, hix = _collect_hashes(df, col)
-    if not len(hfp):
-        return 0
-    fp, i1 = _fp_i1(hfp, hix, table.shape[0])
-    return bulk_delete(table, fp, i1)
+    """Driver-side table over ``df[col]``: collect only the two xxhash64
+    bases (16 bytes/row, Arrow transfer) and insert with numpy."""
+    return Cuckoo().build_local(df, col, n_buckets)
 
 
 def maybe_seen_col(spark, table_bytes: bytes, n_buckets: int):
     """(hfp_col, hix_col) -> boolean Column; True = possibly seen."""
-    bc = spark.sparkContext.broadcast(
-        np.frombuffer(table_bytes, dtype=np.uint16).reshape(n_buckets, SLOTS)
-    )
-
-    @F.pandas_udf("boolean")
-    def probe(hfp: pd.Series, hix: pd.Series) -> pd.Series:
-        if len(hfp) == 0:
-            return pd.Series([], dtype=bool)
-        fp, i1 = _fp_i1(hfp.to_numpy(), hix.to_numpy(), n_buckets)
-        return pd.Series(bulk_probe(bc.value, fp, i1))
-
-    return probe
-
-
-# ---------------------------------------------------------------------------
-# sharded layout (the >= 10^9-keys path): table state is a DataFrame,
-# probe/insert/delete are cogroups — nothing broadcast, per-task memory
-# is capacity/S. Shard key reuses the Bloom module's independent seed-2
-# hash so placement is uncorrelated with seeds 3/4.
-# ---------------------------------------------------------------------------
-
-from . import bloom as _BL  # noqa: E402  (shard_col only)
-
-shard_col = _BL.shard_col
-
-
-def _hashed(df: DataFrame, col: str, n_shards: int) -> DataFrame:
-    return df.select(
-        shard_col(col, n_shards).alias("shard"), *hash_cols(col)
-    )
-
-
-def build_shard_tables(
-    df: DataFrame, col: str, n_buckets: int, n_shards: int = N_SHARDS
-) -> DataFrame:
-    """(shard, table) rows over ``df[col]``; ``n_buckets`` is PER-SHARD.
-    One shuffle on the shard key; each group bulk-inserts with numpy.
-    Shards with no keys emit no row (probe treats a missing shard as
-    all-definitely-new)."""
-    def mk(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        table = new_table(n_buckets)
-        fp, i1 = _fp_i1(
-            pdf["hfp"].to_numpy(), pdf["hix"].to_numpy(), n_buckets
-        )
-        bulk_insert(table, fp, i1)
-        return pd.DataFrame({"shard": [int(key[0])], "table": [table.tobytes()]})
-
-    return _hashed(df, col, n_shards).groupBy("shard").applyInPandas(
-        mk, SHARD_SCHEMA
-    )
-
-
-def _shard_update(
-    state: DataFrame,
-    df: DataFrame,
-    col: str,
-    n_buckets: int,
-    n_shards: int,
-    delete: bool,
-) -> DataFrame:
-    """(state shard table) + (this round's keys) -> updated shard table.
-    Shards with no new keys pass through unchanged; shards with keys but no
-    table yet start empty. One shuffle on the shard key — the same exchange
-    the probe already pays.
-
-    Implemented as UNION + groupBy.applyInPandas, deliberately NOT a
-    cogroup: Catalyst's size-only estimate survives ``localCheckpoint``
-    (the LogicalRDD leaf carries the origin plan's stats over) and a
-    binary node's default estimate is the PRODUCT of its children — a
-    cogroup that folds state back into itself therefore SQUARES the
-    estimate every round, and after ~20 rounds the driver OOMs just
-    computing the gigabit-wide BigInteger. Union children ADD instead, so
-    the estimate grows linearly with rounds. State rows travel with
-    ``hfp = hix = 0`` (never read) rather than NULL so the hash columns
-    stay exact int64 through Arrow — a nullable int64 would reach pandas
-    as float64 and corrupt 63-bit hashes."""
-    keys = _hashed(df, col, n_shards).withColumn(
-        "table", F.lit(None).cast("binary")
-    )
-    st = state.select(
-        "shard",
-        F.lit(0).cast("long").alias("hfp"),
-        F.lit(0).cast("long").alias("hix"),
-        "table",
-    )
-    both = st.unionByName(keys.select("shard", "hfp", "hix", "table"))
-
-    def upd(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        shard = int(key[0])
-        has_tbl = pdf["table"].notna()
-        krows = pdf[~has_tbl]
-        tbl = pdf[has_tbl]
-        if len(tbl):
-            table = np.frombuffer(
-                tbl["table"].iloc[0], dtype=np.uint16
-            ).reshape(n_buckets, SLOTS)
-            if len(krows) == 0:  # no keys for this shard: passthrough
-                return pd.DataFrame(
-                    {"shard": [shard], "table": [tbl["table"].iloc[0]]}
-                )
-            table = table.copy()
-        else:
-            table = new_table(n_buckets)
-        fp, i1 = _fp_i1(
-            krows["hfp"].to_numpy(), krows["hix"].to_numpy(), n_buckets
-        )
-        if delete:
-            bulk_delete(table, fp, i1)
-        else:
-            bulk_insert(table, fp, i1)
-        return pd.DataFrame({"shard": [shard], "table": [table.tobytes()]})
-
-    return both.groupBy("shard").applyInPandas(upd, SHARD_SCHEMA)
-
-
-def insert_shard_tables(
-    state: DataFrame, df: DataFrame, col: str, n_buckets: int,
-    n_shards: int = N_SHARDS,
-) -> DataFrame:
-    return _shard_update(state, df, col, n_buckets, n_shards, delete=False)
-
-
-def delete_shard_tables(
-    state: DataFrame, df: DataFrame, col: str, n_buckets: int,
-    n_shards: int = N_SHARDS,
-) -> DataFrame:
-    return _shard_update(state, df, col, n_buckets, n_shards, delete=True)
-
-
-def probe_sharded(
-    cand: DataFrame,
-    shards: DataFrame,
-    col: str,
-    n_buckets: int,
-    n_shards: int = N_SHARDS,
-    out_col: str = "_maybe",
-) -> DataFrame:
-    """``cand`` + boolean ``out_col`` (True = possibly seen). Cogroup on
-    the shard key: each task sees one shard's candidates and that shard's
-    single table row — no broadcast of any table."""
-    keyed = (
-        cand.withColumn("_shard", shard_col(col, n_shards))
-        .withColumn("_hfp", F.xxhash64(F.col(col), F.lit(FP_SEED)))
-        .withColumn("_hix", F.xxhash64(F.col(col), F.lit(IX_SEED)))
-    )
-    out_schema = cand.schema.add(out_col, "boolean")
-    out_cols = [f.name for f in out_schema.fields]
-
-    def probe(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if len(left) == 0:
-            return pd.DataFrame(columns=out_cols)
-        out = left.drop(columns=["_shard", "_hfp", "_hix"])
-        if len(right) == 0:
-            out[out_col] = False
-            return out[out_cols]
-        table = np.frombuffer(
-            right["table"].iloc[0], dtype=np.uint16
-        ).reshape(n_buckets, SLOTS)
-        fp, i1 = _fp_i1(
-            left["_hfp"].to_numpy(), left["_hix"].to_numpy(), n_buckets
-        )
-        out[out_col] = bulk_probe(table, fp, i1)
-        return out[out_cols]
-
-    return (
-        keyed.groupBy("_shard")
-        .cogroup(shards.groupBy("shard"))
-        .applyInPandas(probe, out_schema)
-    )
+    cuckoo = Cuckoo()
+    return SF.probe_udf(spark, cuckoo, cuckoo.from_bytes(table_bytes, n_buckets))

@@ -23,7 +23,8 @@ Scale design (10^10 frontier, 1000 executors):
    page store — one scan, zero shuffle of pages; with a bucketed/Iceberg
    page store this becomes a storage-partitioned join with no scan at all
    of non-matching buckets;
- - the seen anti-join is pre-filtered by a Bloom bitmap (plans/bloom.py):
+ - the seen anti-join is pre-filtered by an approximate seen filter
+   (plans/seen_filter.py — bloom or cuckoo, driver-held or sharded):
    definitely-new candidates skip the join; only maybe-seen rows shuffle;
  - seq assignment uses two-phase prefix sums (plans/seq.py) — no global
    window, no single-partition bottleneck;
@@ -35,6 +36,7 @@ Scale design (10^10 frontier, 1000 executors):
 from __future__ import annotations
 
 import json
+import os
 import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
@@ -48,9 +50,8 @@ from ..functions import expressions as X
 from ..functions import kernels as K
 from ..functions import udfs as U
 from .parallelize import local_df
-from . import bloom as BL
-from . import cuckoo as CK
 from . import seq as seq_mod
+from .seen_filter import SeenFilter
 from .seq import (
     range_bucket_expr,
     with_global_seq,
@@ -107,6 +108,28 @@ ITEMS_SCHEMA = (
 )
 
 
+class _PhaseClock:
+    """One round's phase timings: each mark records the wall ms since the
+    previous mark. Profiling-only detail marks (SPARK_PHASE_DETAIL=1) split
+    the coarse phases at each materialization boundary; off by default so
+    the bench phase tables keep their stable 5-phase shape. One clock per
+    thread: a worker thread marks its own, merged after its result."""
+
+    def __init__(self):
+        self.ms: dict[str, float] = {}
+        self.last = time.time()
+        self.detail = os.environ.get("SPARK_PHASE_DETAIL") == "1"
+
+    def mark(self, name: str) -> None:
+        now = time.time()
+        self.ms[name] = round((now - self.last) * 1000, 1)
+        self.last = now
+
+    def dmark(self, name: str) -> None:
+        if self.detail:
+            self.mark(name)
+
+
 @dataclass
 class RoundMetrics:
     round: int
@@ -124,8 +147,8 @@ class RoundMetrics:
     # F17 (worker.cpp:102-109): wall-clock stamp of the round's completion,
     # the reference's log-line timestamp format
     ts: str = ""
-    # rows that survived the Bloom pre-filter and went to the exact
-    # anti-join; -1 = bloom disabled (then ALL candidates hit the join)
+    # rows that survived the seen pre-filter and went to the exact
+    # anti-join; -1 on idle rounds (nothing probed)
     bloom_checked: int = -1
     # True when the round ran on the driver fast path (_run_round_fast)
     fast_path: bool = False
@@ -141,12 +164,10 @@ class CrawlEngine:
         min_delay: int = 0,
         max_pages: int = 0,
         checkpoint_dir: str | None = None,
-        use_bloom: bool = True,
         num_partitions: int | None = None,
         broadcast_threshold: int = 100_000,
         robots_rules: DataFrame | None = None,
         bloom_shard_threshold: int = 5_000_000,
-        use_expr_kernels: bool = True,
         table_format=None,
         pin_storage_level: "StorageLevel | None" = None,
         compact_every: int = 0,
@@ -175,7 +196,6 @@ class CrawlEngine:
 
             table_format = ParquetAdapter()
         self.table_format = table_format
-        self.use_bloom = use_bloom
         self.pin_storage_level = pin_storage_level
         self.n_part = num_partitions or spark.sparkContext.defaultParallelism
         self.broadcast_threshold = broadcast_threshold
@@ -194,10 +214,6 @@ class CrawlEngine:
         self._robots_full = (
             robots_rules is not None and "allow" in robots_rules.columns
         )
-        # F7 in the hot path: the whole-stage-codegen expression twin of the
-        # canonicalize kernel (byte-equal — ASCII-only translate lowering;
-        # fuzz-asserted in tests). False falls back to the pandas UDF.
-        self.use_expr_kernels = use_expr_kernels
 
         self.frontier: DataFrame | None = None
         self.seen: DataFrame | None = None
@@ -207,34 +223,16 @@ class CrawlEngine:
         self._seen_parts: list[DataFrame] = []
         self._item_parts: list[DataFrame] = [self.items]
         self.frontier_size = 0
-        # Bloom seen-filter state. Two physical layouts, same semantics:
-        #  - below bloom_shard_threshold seen-URLs: ONE driver-held bitmap,
-        #    OR-updated incrementally, broadcast to the probe UDF;
-        #  - above it: the sharded (shard, bitmap) DataFrame from plans/bloom
-        #    — nothing broadcast, probe is a cogroup, per-task memory m/S.
-        # The switch is one-way (filters only grow) and never changes
-        # answers: both layouts are exact pre-filters ahead of the same
-        # exact anti-join.
-        # seen_filter selects the approximate pre-filter family (north-star
-        # "bloom/cuckoo URL-seen"): "bloom" = OR-mergeable bitmap (default),
-        # "cuckoo" = deletable fingerprint table (plans/cuckoo) — identical
-        # exactness either way (both are pre-filters ahead of the same exact
-        # anti-join), but cuckoo supports DELETION, so add_seed force-requeue
-        # removes the fingerprint instead of leaving a stale bloom positive.
-        if seen_filter not in ("bloom", "cuckoo"):
-            raise ValueError(f"seen_filter must be bloom|cuckoo: {seen_filter}")
-        self.seen_filter = seen_filter
-        self.bloom_shard_threshold = bloom_shard_threshold
-        # driver-held filter state: bloom = uint8 bitmap (m = _bloom_m bits),
-        # cuckoo = (n_buckets, 4) uint16 table (_bloom_m = n_buckets; for the
-        # sharded layout, PER-SHARD buckets)
-        self._bloom_bm = None
-        self._bloom_m = 0
-        self._bloom_shards: DataFrame | None = None
-        # full rebuilds of the bitmap from the whole seen-set (capacity
-        # growth or missing state); resume restores persisted state so its
-        # first round does NOT count one — asserted in tests
-        self.bloom_rebuilds = 0
+        # approximate pre-filter ahead of the exact seen anti-join (north-star
+        # "bloom/cuckoo URL-seen"): seen_filter picks the family — "bloom",
+        # an OR-mergeable bitmap, or "cuckoo", a fingerprint table that also
+        # DELETES, so add_seed force-requeue removes the fingerprint instead
+        # of leaving a stale positive. Past bloom_shard_threshold seen URLs
+        # its state moves from the driver into a sharded DataFrame. Neither
+        # choice changes an answer.
+        self.seen_filter = SeenFilter(
+            spark, seen_filter, bloom_shard_threshold, self._pin
+        )
         self.metrics: list[RoundMetrics] = []
         self.round_num = 0
         self.next_seq = 0
@@ -311,20 +309,6 @@ class CrawlEngine:
 
     # ------------------------------------------------------------------ state
 
-    def _canonical_col(self, col: str):
-        """F7 over a column: codegen expression by default, pandas UDF when
-        use_expr_kernels=False (both byte-equal to the kernel)."""
-        if self.use_expr_kernels:
-            return F.expr(X.canonicalize_url_sql(col))
-        return U.canonicalize_udf(F.col(col))
-
-    def _price_col(self, col: str):
-        """F15 price→double: codegen expression by default (fuzz-proven
-        byte-equal to Item.h:54-89), pandas UDF as the fallback."""
-        if self.use_expr_kernels:
-            return X.price_value_expr(F.col(col))
-        return U.price_value_udf(F.col(col))
-
     def _pin(self, df: DataFrame) -> DataFrame:
         """Truncate lineage between rounds (iterative plans otherwise grow
         unboundedly). Disk checkpointing happens separately per round.
@@ -397,27 +381,6 @@ class CrawlEngine:
                 self._item_parts = [self.items]
                 self._items_last_compact = self.items_count
 
-    def _pin_shards(self, df: DataFrame) -> DataFrame:
-        """Pin the sharded seen-filter state AND erase its inherited size
-        estimate. ``localCheckpoint`` truncates lineage but the LogicalRDD
-        leaf carries the origin plan's Catalyst size estimate over, and a
-        binary node's default estimate is the PRODUCT of its children — the
-        filter state is re-derived from itself every round (probe cogroups,
-        insert merges), so the inherited estimate compounds exponentially
-        with rounds until the driver OOMs in ``BigInteger.multiply`` while
-        merely *analyzing* a later round's plan (observed at ~20 rounds
-        under host_budget). Re-wrapping the checkpointed RDD in a fresh
-        DataFrame resets the leaf to the default estimate; row-conversion
-        cost at read time is negligible — the state is N_SHARDS rows."""
-        pinned = self._pin(df)
-        jdf = pinned._jdf
-        return DataFrame(
-            self.spark._jsparkSession.createDataFrame(
-                jdf.toJavaRDD(), jdf.schema()
-            ),
-            self.spark,
-        )
-
     def seed(self, start_paths: list[str]) -> "CrawlEngine":
         rows = []
         for i, p in enumerate(start_paths):
@@ -483,13 +446,9 @@ class CrawlEngine:
             self.seen_count -= n_removed
             if self._seen_mirror is not None:
                 self._seen_mirror.discard(canon)
-            # seen_filter="cuckoo" deletes the fingerprint too, keeping the
-            # filter tight across requeues; a bloom bitmap cannot un-set
-            # bits — the exact anti-join decides membership either way, so
-            # a stale bloom positive only costs one extra probe row. The
-            # REMOVED url must be enqueueable regardless, which it is: the
-            # enqueue below bypasses the dedup path entirely.
-            self._bloom_delete(removed.select("canonical"), "canonical")
+            # a stale filter positive (bloom cannot delete) never blocks the
+            # requeue: the enqueue below bypasses the dedup path entirely
+            self.seen_filter.delete(removed.select("canonical"))
 
         p = path if path.startswith("/") else "/" + path
         row = [(self.next_seq, p, url, canon, K.url_host(url), -1, 0,
@@ -517,146 +476,26 @@ class CrawlEngine:
         self.seen_count += 1
         if self._seen_mirror is not None:
             self._seen_mirror.add(canon)
-        if self.use_bloom and (
-            self._bloom_bm is not None or self._bloom_shards is not None
-        ):
-            self._bloom_add(new_seen, "canonical", 1)
+        self._cap_mirrors()
+        self.seen_filter.add(new_seen, self.seen, self.seen_count)
         self.next_seq += 1
         self.stopped = False
         return self
-
-    # ------------------------------------------------------------------ bloom
-
-    @property
-    def _bloom_sharded(self) -> bool:
-        return self.seen_count >= self.bloom_shard_threshold
-
-    def _bloom_ensure(self) -> None:
-        """(Re)build the bitmap state from the full seen-set when absent or
-        past capacity; otherwise it is OR-updated incrementally. Above
-        ``bloom_shard_threshold`` seen-URLs the state is the sharded
-        DataFrame layout (driver-held bitmap is dropped)."""
-        import numpy as np
-
-        n = max(1, self.next_seq)
-        if self.seen_filter == "cuckoo":
-            if self._bloom_sharded:
-                # rebuild when load would pass 0.5 of total slot capacity
-                if (
-                    self._bloom_shards is None
-                    or n * 2 > CK.capacity(self._bloom_m) * CK.N_SHARDS
-                ):
-                    self._bloom_m = CK.next_pow2_buckets(
-                        max(1, 2 * n // CK.N_SHARDS)
-                    )
-                    self._bloom_shards = self._pin_shards(
-                        CK.build_shard_tables(self.seen, "canonical", self._bloom_m)
-                    )
-                    self._bloom_bm = None
-                    self.bloom_rebuilds += 1
-                return
-            if self._bloom_bm is None or n * 2 > CK.capacity(self._bloom_m):
-                self._bloom_m = CK.next_pow2_buckets(4 * n)  # rebuilds rare
-                self._bloom_bm = CK.cuckoo_local(self.seen, "canonical", self._bloom_m)
-                self.bloom_rebuilds += 1
-            return
-        if self._bloom_sharded:
-            # per-shard capacity; rebuild when the whole filter outgrows it
-            if self._bloom_shards is None or n * 16 > self._bloom_m * BL.N_SHARDS:
-                self._bloom_m = BL._next_pow2(n * 32 // BL.N_SHARDS)
-                self._bloom_shards = self._pin_shards(
-                    BL.build_shard_bitmaps(self.seen, "canonical", self._bloom_m)
-                )
-                self._bloom_bm = None
-                self.bloom_rebuilds += 1
-            return
-        if self._bloom_bm is None or n * 16 > self._bloom_m:
-            self._bloom_m = BL._next_pow2(n * 32)  # headroom: rebuilds are rare
-            bm, _ = BL.build_bloom(self.seen, "canonical", self._bloom_m)
-            self._bloom_bm = np.frombuffer(bm, dtype=np.uint8).copy()
-            self.bloom_rebuilds += 1
-
-    def _bloom_add(self, df: DataFrame, col: str, n_rows: int) -> None:
-        import numpy as np
-
-        if self.seen_filter == "cuckoo":
-            # unlike a bloom bitmap (which merely densifies), a cuckoo table
-            # has hard slot capacity — grow BEFORE the increment would push
-            # the load past 0.5. Both call sites update self.seen/seen_count
-            # first, so a rebuild from self.seen already includes df.
-            if self._bloom_shards is not None:
-                if self.seen_count * 2 > CK.capacity(self._bloom_m) * CK.N_SHARDS:
-                    self._bloom_m = CK.next_pow2_buckets(
-                        max(1, 4 * self.seen_count // CK.N_SHARDS)
-                    )
-                    self._bloom_shards = self._pin_shards(
-                        CK.build_shard_tables(self.seen, col, self._bloom_m)
-                    )
-                    self.bloom_rebuilds += 1
-                    return
-                self._bloom_shards = self._pin_shards(
-                    CK.insert_shard_tables(
-                        self._bloom_shards, df, col, self._bloom_m
-                    )
-                )
-            else:
-                if self.seen_count * 2 > CK.capacity(self._bloom_m):
-                    self._bloom_m = CK.next_pow2_buckets(4 * self.seen_count)
-                    self._bloom_bm = CK.cuckoo_local(self.seen, col, self._bloom_m)
-                    self.bloom_rebuilds += 1
-                    return
-                CK.insert_local(self._bloom_bm, df, col)
-            return
-        if self._bloom_shards is not None:
-            inc = BL.build_shard_bitmaps(df, col, self._bloom_m)
-            self._bloom_shards = self._pin_shards(
-                BL.or_merge_shard_bitmaps(self._bloom_shards, inc)
-            )
-            return
-        if n_rows < 1_000_000:
-            inc = BL.bloom_bits_local(df, col, self._bloom_m)
-        else:
-            bm, _ = BL.build_bloom(df, col, self._bloom_m)
-            inc = np.frombuffer(bm, dtype=np.uint8)
-        np.bitwise_or(self._bloom_bm, inc, out=self._bloom_bm)
-
-    def _bloom_delete(self, df: DataFrame, col: str) -> bool:
-        """Remove keys from the seen pre-filter, where the filter family
-        supports it. Cuckoo filters delete (one fingerprint copy per key,
-        exact because inserts keep multiset semantics and the seen-set is
-        distinct); a Bloom bitmap cannot un-set bits — returns False and the
-        caller documents the stale positive (it only costs one extra exact
-        anti-join probe row, never an answer)."""
-        if self.seen_filter != "cuckoo":
-            return False
-        if self._bloom_shards is not None:
-            self._bloom_shards = self._pin_shards(
-                CK.delete_shard_tables(self._bloom_shards, df, col, self._bloom_m)
-            )
-            return True
-        if self._bloom_bm is not None:
-            CK.delete_local(self._bloom_bm, df, col)
-            return True
-        return False
 
     # ------------------------------------------------------- driver fast round
 
     def _fast_eligible(self) -> bool:
         """True when this round can run driver-side (_run_round_fast):
         the frontier fits the gate, the dequeue order needs no Spark expr
-        (priority_expr), and the seen-filter state is driver-local (the
-        sharded ≥5M-key layouts stay on the distributed path)."""
+        (priority_expr), and the seen-filter state is driver-held (the
+        sharded layouts stay on the distributed path)."""
         if self.fast_round_rows <= 0:
             return False
         if self.frontier_size > self.fast_round_rows:
             return False
         if self.priority_expr is not None:
             return False
-        if self.use_bloom and (
-            self._bloom_shards is not None or self._bloom_sharded
-        ):
-            return False
-        return True
+        return self.seen_filter.driver_local(self.seen_count)
 
     def _frontier_rows(self) -> list[tuple]:
         """Driver mirror of the frontier (FRONTIER_SCHEMA field order),
@@ -667,55 +506,14 @@ class CrawlEngine:
             ]
         return self._frontier_local
 
-    def _bloom_probe_local(self, canonicals: list[str]):
-        """Maybe-seen flags over the LOCAL filter state via the driver
-        xxh64 twin (functions/xxh64) — bit-identical to the JVM probe
-        (bloom: all-k-bits-set; cuckoo: fingerprint in either bucket)."""
-        import numpy as np
-
-        from ..functions import xxh64 as XX
-
-        if self.seen_filter == "cuckoo":
-            hfp = XX.hash_str_array(canonicals, CK.FP_SEED)
-            hix = XX.hash_str_array(canonicals, CK.IX_SEED)
-            fp, i1 = CK._fp_i1(hfp, hix, self._bloom_bm.shape[0])
-            return CK.bulk_probe(self._bloom_bm, fp, i1)
-        h1 = XX.hash_str_array(canonicals)
-        h2 = XX.hash_str_array(canonicals, 1)
-        bits = BL._probe_bits(h1, h2, self._bloom_m)
-        masks = (1 << (bits & 7)).astype(np.uint8)
-        return ((self._bloom_bm[bits >> 3] & masks) == masks).all(axis=1)
-
-    def _bloom_add_local(self, canonicals: list[str]) -> None:
-        """_bloom_add twin for driver-known keys — zero Spark jobs on the
-        steady path; the rare cuckoo capacity rebuild still goes through
-        the DataFrame build (it reads the whole seen-set anyway). Callers
-        update seen/seen_count first, like _bloom_add's call sites."""
-        import numpy as np
-
-        from ..functions import xxh64 as XX
-
-        if not canonicals:
-            return
-        if self.seen_filter == "cuckoo":
-            if self.seen_count * 2 > CK.capacity(self._bloom_m):
-                self._bloom_m = CK.next_pow2_buckets(4 * self.seen_count)
-                self._bloom_bm = CK.cuckoo_local(
-                    self.seen, "canonical", self._bloom_m
-                )
-                self.bloom_rebuilds += 1
-                return
-            hfp = XX.hash_str_array(canonicals, CK.FP_SEED)
-            hix = XX.hash_str_array(canonicals, CK.IX_SEED)
-            fp, i1 = CK._fp_i1(hfp, hix, self._bloom_bm.shape[0])
-            CK.bulk_insert(self._bloom_bm, fp, i1)
-            return
-        h1 = XX.hash_str_array(canonicals)
-        h2 = XX.hash_str_array(canonicals, 1)
-        bits = BL._probe_bits(h1, h2, self._bloom_m).ravel()
-        np.bitwise_or.at(
-            self._bloom_bm, bits >> 3, (1 << (bits & 7)).astype(np.uint8)
-        )
+    def _cap_mirrors(self) -> bool:
+        """Kill both driver mirrors once seen+items outgrow MIRROR_MAX_ROWS,
+        on every path that grows the state; True while the state fits."""
+        if self.seen_count + self.items_count <= MIRROR_MAX_ROWS:
+            return True
+        self._seen_mirror = None
+        self._items_mirror = None
+        return False
 
     def _ensure_mirrors(self) -> bool:
         """(Re)build the exact driver mirrors when the state is small
@@ -723,10 +521,10 @@ class CrawlEngine:
         returns True when the mirrors are live. A dead mirror above
         MIRROR_MAX_ROWS stays dead — the distributed probe path owns that
         regime."""
+        if not self._cap_mirrors():
+            return False
         if self._seen_mirror is not None and self._items_mirror is not None:
             return True
-        if self.seen_count + self.items_count > MIRROR_MAX_ROWS:
-            return False
         rows = (
             self.seen.select(
                 F.col("canonical").alias("k"), F.lit("s").alias("src")
@@ -789,31 +587,17 @@ class CrawlEngine:
         exact membership probe (_membership_probe). Parse/dedup/seq run on
         the driver through the SAME pure-Python kernels the pandas UDFs
         wrap (functions/kernels — fuzz-verified against the compiled
-        reference), sanitized at the same boundary (udfs._san); bloom and
-        cuckoo updates go through the xxh64 driver twin, bit-identical to
-        the JVM-hashed updates. State increments become LocalRelations —
-        leaf plans that need no localCheckpoint pin. Equivalence with the
+        reference), sanitized at the same boundary (udfs._san); the seen
+        filter probes and inserts driver-known keys on its driver-held
+        state, bit-identical to the JVM-hashed path. State increments
+        become LocalRelations — leaf plans that need no localCheckpoint
+        pin. Equivalence with the
         distributed path is asserted per scenario in
         tests/test_fast_rounds.py, and the goldens/differential fuzz run
         over whichever path the gate picks.
         """
-        t0 = time.time()
-        _ph: dict[str, float] = {}
-        _last = [t0]
-
-        def mark(name: str) -> None:
-            now = time.time()
-            _ph[name] = round((now - _last[0]) * 1000, 1)
-            _last[0] = now
-
-        import os as _os
-
-        _detail = _os.environ.get("SPARK_PHASE_DETAIL") == "1"
-
-        def dmark(name: str) -> None:
-            if _detail:
-                mark(name)
-
+        clock = _PhaseClock()
+        t0 = clock.last
         rows = sorted(self._frontier_rows(), key=lambda r: r[0])  # seq order
 
         # --- min_delay eligibility + per-host budget (run_round twin) ----
@@ -845,13 +629,13 @@ class CrawlEngine:
             self._item_parts.append(
                 local_df(self.spark, [], ITEMS_SCHEMA)
             )
-            mark("dequeue_fetch")
+            clock.mark("dequeue_fetch")
             self.metrics.append(
                 RoundMetrics(
                     round=self.round_num, urls_dequeued=0, urls_fetched=0,
                     fetch_misses=0, books_found=0, links_extracted=0,
                     links_new=0, links_dup=0, links_ignored=0,
-                    wall_ms=(time.time() - t0) * 1000, phase_ms=_ph,
+                    wall_ms=(time.time() - t0) * 1000, phase_ms=clock.ms,
                     ts=time.strftime("%Y-%m-%d %H:%M:%S"),
                     fast_path=True,
                 )
@@ -904,7 +688,7 @@ class CrawlEngine:
                 self.dequeue_log.append(
                     (self.round_num, r[0], r[1], r[2] in pages_by_url)
                 )
-        mark("dequeue_fetch")
+        clock.mark("dequeue_fetch")
         self.pages_crawled += n_hits
 
         # --- parse: the UDF kernels, driver-side, same _san boundary ----
@@ -997,17 +781,11 @@ class CrawlEngine:
             )
         n_ignored += n_robots_blocked
 
-        n_bloom_checked = -1
-        if self.use_bloom:
-            self._bloom_ensure()
-            flags = self._bloom_probe_local([c[4] for c in cand_rows])
-            n_bloom_checked = int(flags.sum()) if len(cand_rows) else 0
-            maybe_canons = {
-                c[4] for c, f in zip(cand_rows, flags) if bool(f)
-            }
-        else:
-            maybe_canons = {c[4] for c in cand_rows}
-        dmark("f.parse_py")
+        self.seen_filter.ensure(self.seen, self.seen_count, self.next_seq)
+        flags = self.seen_filter.probe_keys([c[4] for c in cand_rows])
+        n_bloom_checked = int(flags.sum()) if len(cand_rows) else 0
+        maybe_canons = {c[4] for c, f in zip(cand_rows, flags) if bool(f)}
+        clock.dmark("f.parse_py")
 
         # --- exact membership for both flows: set lookups against the
         # driver mirrors when live (zero jobs — the common fast-round
@@ -1022,7 +800,7 @@ class CrawlEngine:
             found_seen, found_items = self._membership_probe(
                 sorted(maybe_canons), book_canons
             )
-        dmark("f.probe_job")
+        clock.dmark("f.probe_job")
 
         # --- items: drop already-known canonicals, stamp item_seq -------
         item_rows = []
@@ -1051,10 +829,10 @@ class CrawlEngine:
         self.items_count += new_item_count
         if self._items_mirror is not None:
             self._items_mirror.update(r[4] for r in item_rows)
-        mark("parse_books")
+        clock.mark("parse_books")
 
         # --- links: first-wins per canonical, drop seen, stamp seq ------
-        mark("extract_links")
+        clock.mark("extract_links")
         new_frontier_rows: list[tuple] = []
         new_seen_rows: list[tuple] = []
         taken_canon: set = set()
@@ -1070,7 +848,7 @@ class CrawlEngine:
             new_seen_rows.append((canon, s, self.round_num + 1))
         n_new = len(new_frontier_rows)
         self.next_seq += n_new
-        mark("dedup_seq")
+        clock.mark("dedup_seq")
 
         popped_seqs = {r[0] for r in popped}
         if n_popped == self.frontier_size:
@@ -1089,9 +867,13 @@ class CrawlEngine:
         self.seen_count += n_new
         if self._seen_mirror is not None:
             self._seen_mirror.update(c for (c, _s, _r) in new_seen_rows)
-        if self.use_bloom and n_new:
-            self._bloom_add_local([c for (c, _s, _r) in new_seen_rows])
-        mark("state_update")
+        self._cap_mirrors()
+        if n_new:
+            self.seen_filter.add(
+                new_seen, self.seen, self.seen_count,
+                keys=[c for (c, _s, _r) in new_seen_rows],
+            )
+        clock.mark("state_update")
 
         self.metrics.append(
             RoundMetrics(
@@ -1106,7 +888,7 @@ class CrawlEngine:
                 links_ignored=n_ignored,
                 wall_ms=(time.time() - t0) * 1000,
                 partition_fetch_counts=part_counts,
-                phase_ms=_ph,
+                phase_ms=clock.ms,
                 ts=time.strftime("%Y-%m-%d %H:%M:%S"),
                 bloom_checked=n_bloom_checked,
                 fast_path=True,
@@ -1132,25 +914,8 @@ class CrawlEngine:
         self._maybe_compact_parts()
         if self._fast_eligible():
             return self._run_round_fast()
-        t0 = time.time()
-        _ph: dict[str, float] = {}
-        _last = [t0]
-
-        def mark(name: str) -> None:
-            now = time.time()
-            _ph[name] = round((now - _last[0]) * 1000, 1)
-            _last[0] = now
-
-        # profiling-only sub-marks (SPARK_PHASE_DETAIL=1): split the coarse
-        # phases at each materialization boundary; off by default so the
-        # bench phase tables keep their stable 5-phase shape
-        import os as _os
-
-        _detail = _os.environ.get("SPARK_PHASE_DETAIL") == "1"
-
-        def dmark(name: str) -> None:
-            if _detail:
-                mark(name)
+        clock = _PhaseClock()
+        t0 = clock.last
 
         # --- dequeue under per-host politeness budget (Q2/Q8) -------------
         # per-host rank via the two-phase grouped prefix-count (plans/seq.py):
@@ -1212,13 +977,13 @@ class CrawlEngine:
             self._item_parts.append(
                 local_df(self.spark, [], ITEMS_SCHEMA)
             )
-            mark("dequeue_fetch")
+            clock.mark("dequeue_fetch")
             self.metrics.append(
                 RoundMetrics(
                     round=self.round_num, urls_dequeued=0, urls_fetched=0,
                     fetch_misses=0, books_found=0, links_extracted=0,
                     links_new=0, links_dup=0, links_ignored=0,
-                    wall_ms=(time.time() - t0) * 1000, phase_ms=_ph,
+                    wall_ms=(time.time() - t0) * 1000, phase_ms=clock.ms,
                     ts=time.strftime("%Y-%m-%d %H:%M:%S"),
                 )
             )
@@ -1300,7 +1065,7 @@ class CrawlEngine:
                 U.extract_links_udf(F.col("html"), page_url).alias("links"),
             )
         )
-        dmark("d.parse_pin")
+        clock.dmark("d.parse_pin")
         # one pool drives this round's concurrent driver threads: the
         # stats collect (now), the books flow and the links counts agg
         # (later) — all independent reads of the pinned parse (guide
@@ -1356,7 +1121,7 @@ class CrawlEngine:
                 ).otherwise(F.col("link")),
             )
             .withColumn("url", F.concat(F.lit(self.base_url), F.col("path")))
-            .withColumn("canonical", self._canonical_col("link"))
+            .withColumn("canonical", F.expr(X.canonicalize_url_sql("link")))
         )
 
         # robots: per-host disallowed-prefix anti-join (broadcast rules +
@@ -1397,63 +1162,28 @@ class CrawlEngine:
             ) & F.col("path").startswith(F.col("_rprefix"))
             kept = kept.join(F.broadcast(rules), robots_cond, "left_anti")
 
-        # Bloom pre-filter: definitely-new rows skip the exact anti-join.
-        # Bitmap is incremental — only this round's new canonicals are
-        # hashed in; full rebuilds only on capacity growth.
-        if self.use_bloom:
-            self._bloom_ensure()
-            if self.seen_filter == "cuckoo":
-                if self._bloom_shards is not None:
-                    flagged = CK.probe_sharded(
-                        kept, self._bloom_shards, "canonical", self._bloom_m
-                    )
-                else:
-                    probe = CK.maybe_seen_col(
-                        self.spark, self._bloom_bm.tobytes(), self._bloom_m
-                    )
-                    flagged = kept.withColumn(
-                        "_maybe",
-                        probe(
-                            F.xxhash64("canonical", F.lit(CK.FP_SEED)),
-                            F.xxhash64("canonical", F.lit(CK.IX_SEED)),
-                        ),
-                    )
-            elif self._bloom_shards is not None:
-                # sharded layout: cogroup probe, no bitmap broadcast
-                flagged = BL.probe_sharded(
-                    kept, self._bloom_shards, "canonical", self._bloom_m
-                )
-            else:
-                probe = BL.maybe_seen_col(
-                    self.spark, self._bloom_bm.tobytes(), self._bloom_m
-                )
-                flagged = kept.withColumn(
-                    "_maybe",
-                    probe(
-                        F.xxhash64("canonical"),
-                        F.xxhash64("canonical", F.lit(1)),
-                    ),
-                )
-            # pin once: the canonicalize UDF + robots anti-join + probe run
-            # exactly one pass; ONE agg then yields both the post-robots row
-            # count (→ robots-blocked total) and the maybe-seen total
-            kept = self._pin(flagged)
-            # the counts agg over the pinned frame runs on a worker thread
-            # — its result is only consumed after the stats join and the
-            # books-flow launch below
-            _ks_fut = _round_pool.submit(
-                kept.agg(
-                    F.count("*").alias("n"),
-                    F.coalesce(
-                        F.sum(F.col("_maybe").cast("long")), F.lit(0)
-                    ).alias("m"),
-                ).first
-            )
-        elif has_robots:
-            kept = self._pin(kept)
+        # seen pre-filter: definitely-new rows skip the exact anti-join. The
+        # filter is incremental — only each round's new canonicals are
+        # inserted; full rebuilds only on capacity growth.
+        self.seen_filter.ensure(self.seen, self.seen_count, self.next_seq)
+        # pin once: the canonicalize expr + robots anti-join + probe run
+        # exactly one pass; ONE agg then yields both the post-robots row
+        # count (→ robots-blocked total) and the maybe-seen total
+        kept = self._pin(self.seen_filter.flag(kept))
+        # the counts agg over the pinned frame runs on a worker thread
+        # — its result is only consumed after the stats join and the
+        # books-flow launch below
+        _ks_fut = _round_pool.submit(
+            kept.agg(
+                F.count("*").alias("n"),
+                F.coalesce(
+                    F.sum(F.col("_maybe").cast("long")), F.lit(0)
+                ).alias("m"),
+            ).first
+        )
 
         stats = stats_fut.result()
-        dmark("d.stats_agg")
+        clock.dmark("d.stats_agg")
         part_counts = {r["_pid"]: r["cnt"] for r in stats}
         n_hits = sum(part_counts.values())
         # parent-seq bounds of this round's fetched pages — the bucket
@@ -1471,7 +1201,7 @@ class CrawlEngine:
                 self.dequeue_log.append(
                     (self.round_num, r["seq"], r["path"], r["seq"] in hit_seqs)
                 )
-        mark("dequeue_fetch")
+        clock.mark("dequeue_fetch")
         self.pages_crawled += n_hits
 
         # --- books: canonical-URL dedup in discovery order -----------------
@@ -1482,7 +1212,7 @@ class CrawlEngine:
                 F.posexplode("books").alias("book_rank", "_bk"),
             )
             .select("parent_seq", "book_rank", "_bk.*")
-            .withColumn("canonical_url", self._canonical_col("url"))
+            .withColumn("canonical_url", F.expr(X.canonicalize_url_sql("url")))
         )
         book_seen = self.items.select("canonical_url")
 
@@ -1490,7 +1220,7 @@ class CrawlEngine:
             return df.select(
                 "parent_seq", "book_rank", "url", "canonical_url",
                 "title", "price", "rating",
-                self._price_col("price").alias("price_value"),
+                X.price_value_expr(F.col("price")).alias("price_value"),
                 X.rating_value_expr(F.col("rating")).alias("rating_value"),
                 X.classify_item_type_expr(X.url_host_expr(F.col("url"))).alias(
                     "item_type"
@@ -1514,6 +1244,7 @@ class CrawlEngine:
         # stays on the MAIN thread after .result(), so per-round
         # ordering and determinism are unchanged.
         def _books_flow():
+            bclock = _PhaseClock()
             if n_books_upper == 0:
                 # bookless round (every fetched page failed the parse gate —
                 # the common case for detail-page rounds): the stats agg above
@@ -1618,7 +1349,7 @@ class CrawlEngine:
                     )
                     .collect()
                 )
-                dmark("b.narrow_stats")
+                bclock.dmark("b.narrow_stats")
                 bucket_counts = {
                     r["_bkt"]: r["surv"] for r in bstats if r["surv"] > 0
                 }
@@ -1690,30 +1421,22 @@ class CrawlEngine:
                         seq_col="item_seq", n_partitions=self.n_part,
                     )
                     new_items = self._pin(stamped.select(*item_cols))
-                dmark("b.final_pin")
-            return new_items, new_item_count
+                bclock.dmark("b.final_pin")
+            return new_items, new_item_count, bclock.ms
 
         books_fut = _round_pool.submit(_books_flow)
 
         n_kept_expected = n_extracted - n_ignored  # rows in `kept` pre-robots
-        n_bloom_checked = -1
-        n_robots_blocked = 0
-        if self.use_bloom:
-            _ks = _ks_fut.result()
-            n_bloom_checked = _ks["m"]
-            dmark("l.probe_pin_agg")
-            if has_robots:
-                n_robots_blocked = n_kept_expected - _ks["n"]
-            sure_new = kept.filter(~F.col("_maybe")).drop("_maybe")
-            maybe = kept.filter(F.col("_maybe")).drop("_maybe")
-            checked = maybe.join(self.seen.select("canonical"), "canonical", "left_anti")
-            cand = sure_new.unionByName(checked)
-        else:
-            if has_robots:
-                n_robots_blocked = n_kept_expected - kept.count()
-            cand = kept.join(self.seen.select("canonical"), "canonical", "left_anti")
+        _ks = _ks_fut.result()
+        n_bloom_checked = _ks["m"]
+        clock.dmark("l.probe_pin_agg")
+        n_robots_blocked = n_kept_expected - _ks["n"] if has_robots else 0
+        sure_new = kept.filter(~F.col("_maybe")).drop("_maybe")
+        maybe = kept.filter(F.col("_maybe")).drop("_maybe")
+        checked = maybe.join(self.seen.select("canonical"), "canonical", "left_anti")
+        cand = sure_new.unionByName(checked)
         n_ignored += n_robots_blocked
-        mark("extract_links")
+        clock.mark("extract_links")
 
         wl = Window.partitionBy("canonical").orderBy("parent_seq", "link_rank")
         firsts = (
@@ -1759,18 +1482,19 @@ class CrawlEngine:
                 start=self.next_seq,
             )
             new_frontier = self._pin(stamped.select(*frontier_cols))
-        dmark("s.seq_pin")
+        clock.dmark("s.seq_pin")
         self.next_seq += n_new
-        mark("dedup_seq")
+        clock.mark("dedup_seq")
 
         # join the concurrent books flow; mutate items state on the
         # main thread (same effect/order as the old serial code)
-        new_items, new_item_count = books_fut.result()
+        new_items, new_item_count, books_ms = books_fut.result()
         _round_pool.shutdown()
+        clock.ms.update(books_ms)
         self._item_parts.append(new_items)
         self.items = self.items.unionByName(new_items)  # lazy over pinned parts
         self.items_count += new_item_count
-        mark("parse_books")
+        clock.mark("parse_books")
 
         if n_popped == self.frontier_size:
             # whole frontier drained — no leftover to carry
@@ -1789,15 +1513,15 @@ class CrawlEngine:
         self._seen_parts.append(new_seen)
         self.seen = self.seen.unionByName(new_seen)  # lazy over pinned parts
         self.seen_count += n_new
-        mirrors_live = (
-            self._seen_mirror is not None
+        new_canons = None
+        if (
+            self._cap_mirrors()
+            and self._seen_mirror is not None
             and self._items_mirror is not None
-            and self.seen_count + self.items_count <= MIRROR_MAX_ROWS
-        )
-        if mirrors_live:
+        ):
             # ONE tagged collect over the already-pinned increments feeds
-            # the exact driver mirrors AND the local bloom update — the
-            # old _bloom_add hashing job over the same rows disappears
+            # the exact driver mirrors AND the driver-held filter's insert
+            # (no separate hashing job over the same rows)
             parts = []
             if n_new:
                 parts.append(
@@ -1812,7 +1536,7 @@ class CrawlEngine:
                         F.lit("i").alias("src"),
                     )
                 )
-            new_canons: list = []
+            new_canons = []
             if parts:
                 u = parts[0]
                 for p in parts[1:]:
@@ -1823,17 +1547,11 @@ class CrawlEngine:
                 self._items_mirror.update(
                     r["k"] for r in rows if r["src"] == "i"
                 )
-            if self.use_bloom and n_new:
-                if self._bloom_shards is None:
-                    self._bloom_add_local(new_canons)
-                else:
-                    self._bloom_add(new_seen, "canonical", n_new)
-        else:
-            self._seen_mirror = None
-            self._items_mirror = None
-            if self.use_bloom and n_new:
-                self._bloom_add(new_seen, "canonical", n_new)
-        mark("state_update")
+        if n_new:
+            self.seen_filter.add(
+                new_seen, self.seen, self.seen_count, keys=new_canons
+            )
+        clock.mark("state_update")
 
         self.metrics.append(
             RoundMetrics(
@@ -1848,7 +1566,7 @@ class CrawlEngine:
                 links_ignored=n_ignored,
                 wall_ms=(time.time() - t0) * 1000,
                 partition_fetch_counts=part_counts,
-                phase_ms=_ph,
+                phase_ms=clock.ms,
                 # F17: the reference's "%Y-%m-%d %H:%M:%S" log stamp
                 ts=time.strftime("%Y-%m-%d %H:%M:%S"),
                 bloom_checked=n_bloom_checked,
@@ -1901,23 +1619,9 @@ class CrawlEngine:
             self._items_base_round = self.round_num
         else:
             tf.write(self._item_parts[-1], str(d / "items_inc"))
-        # Bloom state rides along so resume never pays the O(seen) rebuild:
-        # the sharded layout as a table through the same seam, the driver
-        # bitmap as raw bytes next to state.json (it IS driver state)
-        if self.use_bloom and self._bloom_m:
-            if self.seen_filter == "cuckoo":
-                if self._bloom_shards is not None:
-                    tf.write(self._bloom_shards, str(d / "cuckoo_shards"))
-                elif self._bloom_bm is not None:
-                    d.mkdir(parents=True, exist_ok=True)
-                    (d / "cuckoo_table.bin").write_bytes(
-                        self._bloom_bm.tobytes()
-                    )
-            elif self._bloom_shards is not None:
-                tf.write(self._bloom_shards, str(d / "bloom_shards"))
-            elif self._bloom_bm is not None:
-                d.mkdir(parents=True, exist_ok=True)
-                (d / "bloom_bitmap.bin").write_bytes(self._bloom_bm.tobytes())
+        # the seen-filter state rides along so resume never pays the
+        # O(seen) rebuild
+        filter_state = self.seen_filter.save(d, tf)
         state = {
             "round": self.round_num,
             "next_seq": self.next_seq,
@@ -1926,8 +1630,7 @@ class CrawlEngine:
             "seen_count": self.seen_count,
             "seen_base_round": self._seen_base_round,
             "items_base_round": self._items_base_round,
-            "bloom_m": self._bloom_m,
-            "seen_filter": self.seen_filter,
+            **filter_state,
             "host_last_round": self._host_last_round,
             "stopped": self.stopped,
             "metrics": [
@@ -1979,42 +1682,7 @@ class CrawlEngine:
             spark, ITEMS_SCHEMA,
             [str(root / f"r{r}" / "items_inc") for r in range(items_base, last + 1)],
         )
-        # restore persisted Bloom state (written by _write_checkpoint) so the
-        # first post-resume round does NOT rebuild the bitmap from the full
-        # seen-set — one O(seen) job saved per resume
-        bloom_m = state.get("bloom_m", 0)
-        # only restore matching filter-family state: a resume under a
-        # different seen_filter just rebuilds on the first round
-        if (
-            eng.use_bloom
-            and bloom_m
-            and state.get("seen_filter", "bloom") == eng.seen_filter
-        ):
-            import numpy as np
-
-            if eng.seen_filter == "cuckoo":
-                if tf.exists(str(d / "cuckoo_shards")):
-                    eng._bloom_m = bloom_m
-                    eng._bloom_shards = eng._pin_shards(
-                        tf.read(
-                            spark, CK.SHARD_SCHEMA, [str(d / "cuckoo_shards")]
-                        )
-                    )
-                elif (d / "cuckoo_table.bin").exists():
-                    eng._bloom_m = bloom_m
-                    eng._bloom_bm = np.frombuffer(
-                        (d / "cuckoo_table.bin").read_bytes(), dtype=np.uint16
-                    ).reshape(bloom_m, CK.SLOTS).copy()
-            elif tf.exists(str(d / "bloom_shards")):
-                eng._bloom_m = bloom_m
-                eng._bloom_shards = eng._pin_shards(
-                    tf.read(spark, BL.SHARD_SCHEMA, [str(d / "bloom_shards")])
-                )
-            elif (d / "bloom_bitmap.bin").exists():
-                eng._bloom_m = bloom_m
-                eng._bloom_bm = np.frombuffer(
-                    (d / "bloom_bitmap.bin").read_bytes(), dtype=np.uint8
-                ).copy()
+        eng.seen_filter.load(d, tf, state)
         eng._seen_parts = [eng.seen]
         eng._item_parts = [eng.items]
         eng.frontier_size = eng.frontier.count()

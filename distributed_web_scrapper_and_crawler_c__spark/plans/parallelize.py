@@ -19,7 +19,7 @@ deterministic sort-before-repartition).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 
 def spread(df: DataFrame, num_partitions: int | None = None) -> DataFrame:

@@ -12,6 +12,7 @@ import numpy as np
 import pytest
 
 from distributed_web_scrapper_and_crawler_c__spark.plans import cuckoo as CK
+from distributed_web_scrapper_and_crawler_c__spark.plans import seen_filter as SF
 from distributed_web_scrapper_and_crawler_c__spark.plans.frontier import CrawlEngine
 from distributed_web_scrapper_and_crawler_c__spark.sources import sitegen
 from distributed_web_scrapper_and_crawler_c__spark.oracle import crawl_oracle
@@ -47,7 +48,7 @@ def test_no_false_negatives_and_fpr_bound():
     n = 20_000
     hfp, hix = _rand_keys(2 * n, 11)
     nb = CK.next_pow2_buckets(n)
-    table = CK.new_table(nb)
+    table = CK.Cuckoo().new(nb)
     fp, i1 = CK._fp_i1(hfp[:n], hix[:n], nb)
     CK.bulk_insert(table, fp, i1)
     assert CK.bulk_probe(table, fp, i1).all()  # never a false negative
@@ -63,7 +64,7 @@ def test_kick_loop_sustains_high_load():
     nb = 1 << 10
     n = int(nb * CK.SLOTS * 0.84)
     hfp, hix = _rand_keys(n, 23)
-    table = CK.new_table(nb)
+    table = CK.Cuckoo().new(nb)
     fp, i1 = CK._fp_i1(hfp, hix, nb)
     CK.bulk_insert(table, fp, i1)
     assert int(np.count_nonzero(table)) == n  # multiset: every copy kept
@@ -76,14 +77,14 @@ def test_capacity_error_is_loud():
     hfp, hix = _rand_keys(n, 31)
     fp, i1 = CK._fp_i1(hfp, hix, nb)
     with pytest.raises(CK.CuckooCapacityError):
-        CK.bulk_insert(CK.new_table(nb), fp, i1)
+        CK.bulk_insert(CK.Cuckoo().new(nb), fp, i1)
 
 
 def test_delete_removes_one_copy_and_is_multiset_safe():
     nb = 1 << 8
     hfp, hix = _rand_keys(500, 7)
     fp, i1 = CK._fp_i1(hfp, hix, nb)
-    table = CK.new_table(nb)
+    table = CK.Cuckoo().new(nb)
     CK.bulk_insert(table, fp, i1)
 
     # plain delete: key becomes definitely-new again
@@ -105,7 +106,7 @@ def test_delete_compacts_buckets_for_reinsertion():
     right — _compact_buckets restores that, so insert-after-delete never
     overwrites a live fingerprint."""
     nb = 1 << 4
-    table = CK.new_table(nb)
+    table = CK.Cuckoo().new(nb)
     fp = np.array([1, 2, 3, 4], dtype=np.uint16)
     i1 = np.zeros(4, dtype=np.int64)  # all in bucket 0 (4 slots: full)
     CK.bulk_insert(table, fp, i1)
@@ -143,11 +144,13 @@ def test_sharded_layout_matches_driver_held(spark):
         ).collect()
     }
 
-    nb_shard = CK.next_pow2_buckets(max(1, 2 * len(urls) // CK.N_SHARDS))
-    shards = CK.build_shard_tables(df, "canonical", nb_shard)
+    nb_shard = CK.next_pow2_buckets(max(1, 2 * len(urls) // SF.N_SHARDS))
+    shards = SF.build_shards(CK.Cuckoo(), df, "canonical", nb_shard)
     shard_res = {
         r["canonical"]: r["_maybe"]
-        for r in CK.probe_sharded(probe_df, shards, "canonical", nb_shard).collect()
+        for r in SF.probe_shards(
+            CK.Cuckoo(), probe_df, shards, "canonical", nb_shard
+        ).collect()
     }
 
     # every inserted url is maybe-seen in BOTH layouts (no false negatives)
@@ -169,14 +172,17 @@ def test_sharded_insert_and_delete_roundtrip(spark):
         "canonical string",
     )
     nb = CK.next_pow2_buckets(64)
-    shards = CK.build_shard_tables(base, "canonical", nb).localCheckpoint()
-    shards = CK.insert_shard_tables(shards, extra, "canonical", nb).localCheckpoint()
-    probed = CK.probe_sharded(extra, shards, "canonical", nb)
+    ck = CK.Cuckoo()
+    shards = SF.build_shards(ck, base, "canonical", nb).localCheckpoint()
+    shards = SF.update_shards(ck, shards, extra, "canonical", nb).localCheckpoint()
+    probed = SF.probe_shards(ck, extra, shards, "canonical", nb)
     assert all(r["_maybe"] for r in probed.collect())
 
-    shards = CK.delete_shard_tables(shards, extra, "canonical", nb).localCheckpoint()
-    probed = {r["canonical"]: r["_maybe"] for r in CK.probe_sharded(
-        base.unionByName(extra), shards, "canonical", nb
+    shards = SF.update_shards(
+        ck, shards, extra, "canonical", nb, delete=True
+    ).localCheckpoint()
+    probed = {r["canonical"]: r["_maybe"] for r in SF.probe_shards(
+        ck, base.unionByName(extra), shards, "canonical", nb
     ).collect()}
     # deleted keys definitely-new again; the base set untouched
     assert sum(probed[r["canonical"]] for r in extra.collect()) <= 1
@@ -189,7 +195,7 @@ def test_pin_shards_erases_inherited_stats(spark, pages):
     self-derived shard state compounds its estimate exponentially with
     rounds — the driver OOMs in BigInteger.multiply while merely analyzing
     a later round's plan (observed at ~20 rounds under host_budget).
-    ``_pin_shards`` must reset the leaf to the default estimate."""
+    ``SeenFilter._pin_shards`` must reset the leaf to the default estimate."""
     import pandas as pd
 
     eng = CrawlEngine(spark, pages, seen_filter="cuckoo")
@@ -216,7 +222,7 @@ def test_pin_shards_erases_inherited_stats(spark, pages):
             .cogroup(base.groupBy("shard"))
             .applyInPandas(upd, "shard int, table binary")
         )
-        state = eng._pin_shards(state)
+        state = eng.seen_filter._pin_shards(state)
     assert digits(state) <= 19  # the default leaf estimate, not a product
     assert state.count() == 4
 
@@ -238,7 +244,7 @@ def test_cuckoo_sharded_crawl_matches_oracle(spark, pages, pages_map):
     )
     res = crawl_oracle.crawl(pages_map, host_budget=7)
     assert_matches_oracle(eng, res)
-    assert eng._bloom_shards is not None and eng._bloom_bm is None
+    assert eng.seen_filter.sharded
 
 
 def test_seen_filter_validation(spark, pages):
@@ -262,13 +268,13 @@ def test_cuckoo_add_seed_deletes_fingerprint(spark, pages, pages_map):
 
     canon = K.canonicalize_url(eng.base_url + "/catalogue/page-1.html")
     one = spark.createDataFrame([(canon,)], "canonical string")
-    hfp, hix = CK._collect_hashes(one, "canonical")
-    fp, i1 = CK._fp_i1(hfp, hix, eng._bloom_m)
-    assert CK.bulk_probe(eng._bloom_bm, fp, i1).all()
+    hfp, hix = SF.collect_hashes(CK.Cuckoo(), one, "canonical")
+    fp, i1 = CK._fp_i1(hfp, hix, eng.seen_filter.size)
+    assert CK.bulk_probe(eng.seen_filter.state, fp, i1).all()
     eng.add_seed("/catalogue/page-1.html")
     # add_seed deleted one copy then re-marked seen at enqueue: still 1 copy
-    assert CK.bulk_probe(eng._bloom_bm, fp, i1).all()
-    assert CK.bulk_delete(eng._bloom_bm.copy(), fp, i1) == 1
+    assert CK.bulk_probe(eng.seen_filter.state, fp, i1).all()
+    assert CK.bulk_delete(eng.seen_filter.state.copy(), fp, i1) == 1
 
     eng.run("/catalogue/page-1.html")
     assert eng.pages_crawled == pages_before + 1
@@ -286,9 +292,9 @@ def test_resume_across_filter_families(spark, pages, pages_map, tmp_path_factory
     part.run("/catalogue/page-1.html", max_rounds=2)
 
     resumed = CrawlEngine.resume(spark, pages, ck, seen_filter="cuckoo")
-    assert resumed._bloom_bm is None and resumed._bloom_shards is None
+    assert resumed.seen_filter.state is None
     resumed.run("/catalogue/page-1.html")
-    assert resumed.bloom_rebuilds >= 1  # rebuilt under the new family
+    assert resumed.seen_filter.rebuilds >= 1  # rebuilt under the new family
     res = crawl_oracle.crawl(pages_map)
     assert {r["canonical"] for r in resumed.seen.collect()} == res.processed
     assert resumed.round_num == res.rounds
@@ -311,11 +317,11 @@ def test_cuckoo_checkpoint_resume(spark, pages, tmp_path_factory):
         spark, pages, part_dir, seen_filter="cuckoo"
     )
     # persisted table restored: first post-resume round must not rebuild
-    assert resumed._bloom_bm is not None
-    assert resumed._bloom_m == part._bloom_m
-    np.testing.assert_array_equal(resumed._bloom_bm, part._bloom_bm)
+    assert resumed.seen_filter.state is not None
+    assert resumed.seen_filter.size == part.seen_filter.size
+    np.testing.assert_array_equal(resumed.seen_filter.state, part.seen_filter.state)
     resumed.run("/catalogue/page-1.html")
-    assert resumed.bloom_rebuilds == 0
+    assert resumed.seen_filter.rebuilds == 0
 
     def state(eng):
         seen = sorted(r["canonical"] for r in eng.seen.collect())

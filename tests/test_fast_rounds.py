@@ -20,10 +20,14 @@ import pytest
 from pyspark.sql import functions as F
 
 from distributed_web_scrapper_and_crawler_c__spark.functions import xxh64 as XX
+from distributed_web_scrapper_and_crawler_c__spark.oracle import crawl_oracle
+from distributed_web_scrapper_and_crawler_c__spark.plans import frontier
 from distributed_web_scrapper_and_crawler_c__spark.plans.frontier import (
     CrawlEngine,
 )
 from distributed_web_scrapper_and_crawler_c__spark.sources import sitegen
+
+from test_frontier_engine import assert_matches_oracle  # noqa: E402
 
 SPEC = sitegen.SiteSpec(n_books=60, n_categories=5, books_per_page=15)
 
@@ -87,7 +91,6 @@ SCENARIOS = {
     "budget": {"host_budget": 3, "max_pages": 18},
     "max_pages": {"max_pages": 23},
     "min_delay_budget": {"min_delay": 2, "host_budget": 2, "max_pages": 12},
-    "no_bloom": {"use_bloom": False},
     "cuckoo": {"seen_filter": "cuckoo"},
 }
 
@@ -119,8 +122,19 @@ def test_mixed_gate_transition(spark, pages):
 def test_bloom_bitmap_bit_identical(spark, pages):
     dist = _crawl(spark, pages, fast=0)
     fast = _crawl(spark, pages, fast=1 << 30)
-    assert dist._bloom_m == fast._bloom_m
-    assert dist._bloom_bm.tobytes() == fast._bloom_bm.tobytes()
+    assert dist.seen_filter.size == fast.seen_filter.size
+    assert dist.seen_filter.state.tobytes() == fast.seen_filter.state.tobytes()
+
+
+def test_fast_rounds_enforce_mirror_cap(spark, pages, monkeypatch):
+    """Fast rounds kill the driver mirrors once seen+items outgrow
+    MIRROR_MAX_ROWS, exactly like distributed rounds; membership then goes
+    through the probe job and the crawl still matches the oracle."""
+    monkeypatch.setattr(frontier, "MIRROR_MAX_ROWS", 40)
+    eng = _crawl(spark, pages, fast=1 << 30, _cache=False)
+    assert all(m.fast_path for m in eng.metrics)
+    assert eng._seen_mirror is None and eng._items_mirror is None
+    assert_matches_oracle(eng, crawl_oracle.crawl(sitegen.pages_dict(SPEC)))
 
 
 def test_priority_frontier_stays_distributed(spark, pages):

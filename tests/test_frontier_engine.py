@@ -2,7 +2,7 @@
 (itself differential-tested against the compiled reference crawl loop):
 identical dequeue order, identical canonical seen-set, identical book list
 in discovery order — for unbudgeted (pure FIFO BFS) and budgeted crawls,
-with and without max_pages truncation and the Bloom pre-filter."""
+with and without max_pages truncation, through the Bloom pre-filter."""
 
 from __future__ import annotations
 
@@ -86,16 +86,7 @@ def test_max_pages_with_budget_matches_oracle(spark, pages, pages_map):
 
 
 def test_bloom_prefilter_preserves_exactness(spark, pages, pages_map):
-    eng = run_engine(spark, pages, use_bloom=True)
-    res = crawl_oracle.crawl(pages_map)
-    assert_matches_oracle(eng, res)
-
-
-def test_udf_canonical_path_matches_oracle(spark, pages, pages_map):
-    """The pandas-UDF kernel path (use_expr_kernels=False) stays a
-    supported fallback and must be golden-identical to the default
-    expression path."""
-    eng = run_engine(spark, pages, use_expr_kernels=False)
+    eng = run_engine(spark, pages)
     res = crawl_oracle.crawl(pages_map)
     assert_matches_oracle(eng, res)
 
@@ -138,7 +129,6 @@ def test_robots_rules_golden(spark, pages, pages_map):
 def test_robots_rules_with_budget_golden(spark, pages, pages_map):
     disallow = [("books.toscrape.com", "/catalogue/category/")]
     rules = spark.createDataFrame(disallow, "host string, prefix string")
-    eng = run_engine(spark, pages, robots_rules=rules, host_budget=6,
-                     use_bloom=True)
+    eng = run_engine(spark, pages, robots_rules=rules, host_budget=6)
     res = crawl_oracle.crawl(pages_map, robots_disallow=disallow, host_budget=6)
     assert_matches_oracle(eng, res)

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from distributed_web_scrapper_and_crawler_c__spark.oracle import crawl_oracle
 from distributed_web_scrapper_and_crawler_c__spark.plans import bloom as BL
+from distributed_web_scrapper_and_crawler_c__spark.plans import seen_filter as SF
 from distributed_web_scrapper_and_crawler_c__spark.plans.frontier import CrawlEngine
 from distributed_web_scrapper_and_crawler_c__spark.plans.seq import with_prefix_sum
 from distributed_web_scrapper_and_crawler_c__spark.sources import sitegen
@@ -110,12 +111,12 @@ def test_sharded_bloom_no_false_negatives(spark):
     mdf = spark.createDataFrame(members, "canonical string")
     odf = spark.createDataFrame(others, "canonical string")
     m_bits = 1 << 14
-    shards = BL.build_shard_bitmaps(mdf, "canonical", m_bits)
+    shards = SF.build_shards(BL.Bloom(), mdf, "canonical", m_bits)
 
-    probed_m = BL.probe_sharded(mdf, shards, "canonical", m_bits).collect()
+    probed_m = SF.probe_shards(BL.Bloom(), mdf, shards, "canonical", m_bits).collect()
     assert all(r["_maybe"] for r in probed_m), "false negative: breaks exactness"
 
-    probed_o = BL.probe_sharded(odf, shards, "canonical", m_bits).collect()
+    probed_o = SF.probe_shards(BL.Bloom(), odf, shards, "canonical", m_bits).collect()
     fp = sum(1 for r in probed_o if r["_maybe"]) / len(probed_o)
     assert fp < 0.2, f"fp rate {fp} — sizing broken"
 
@@ -124,25 +125,25 @@ def test_sharded_bloom_or_merge(spark):
     a = spark.createDataFrame([(f"a{i}",) for i in range(200)], "canonical string")
     b = spark.createDataFrame([(f"b{i}",) for i in range(200)], "canonical string")
     m_bits = 1 << 13
-    merged = BL.or_merge_shard_bitmaps(
-        BL.build_shard_bitmaps(a, "canonical", m_bits),
-        BL.build_shard_bitmaps(b, "canonical", m_bits),
+    merged = SF.update_shards(
+        BL.Bloom(), SF.build_shards(BL.Bloom(), a, "canonical", m_bits),
+        b, "canonical", m_bits,
     )
     both = a.unionByName(b)
-    probed = BL.probe_sharded(both, merged, "canonical", m_bits).collect()
+    probed = SF.probe_shards(BL.Bloom(), both, merged, "canonical", m_bits).collect()
     assert all(r["_maybe"] for r in probed)
 
 
 def test_sharded_bloom_crawl_golden(spark, pages, pages_map):
     """Force the sharded layout from round 0 (threshold=1): the crawl must
     stay byte-identical to the oracle."""
-    eng = CrawlEngine(spark, pages, use_bloom=True, bloom_shard_threshold=1)
+    eng = CrawlEngine(spark, pages, bloom_shard_threshold=1)
     eng.record_dequeues = True
     eng.run("/catalogue/page-1.html")
     res = crawl_oracle.crawl(pages_map)
     assert eng.crawl_order() == res.crawl_order
     assert {r["canonical"] for r in eng.seen.collect()} == res.processed
-    assert eng._bloom_shards is not None  # sharded path actually ran
+    assert eng.seen_filter.sharded  # sharded path actually ran
     # bloom_checked recorded: every round that had candidates reports how
     # many survived the pre-filter into the exact anti-join
     assert all(m.bloom_checked >= 0 for m in eng.metrics)
@@ -250,7 +251,7 @@ def test_budgeted_crawl_uses_grouped_rank_scale_path(spark, pages, pages_map):
 
 
 def test_round_metrics_ts_and_accounting(spark, pages, pages_map):
-    eng = CrawlEngine(spark, pages, use_bloom=True)
+    eng = CrawlEngine(spark, pages)
     eng.run("/catalogue/page-1.html")
     res = crawl_oracle.crawl(pages_map)
     for m in eng.metrics:

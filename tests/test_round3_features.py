@@ -101,39 +101,43 @@ def test_simhash_batch_vectorization_is_bit_identical(spark):
 
 def test_bloom_state_restored_on_resume_driver_bitmap(spark, pages, pages_map, tmp_path):
     ck = str(tmp_path / "ck")
-    eng = CrawlEngine(spark, pages, checkpoint_dir=ck, use_bloom=True)
+    eng = CrawlEngine(spark, pages, checkpoint_dir=ck)
     eng.run("/catalogue/page-1.html")
-    assert eng._bloom_bm is not None and eng.bloom_rebuilds >= 1
+    assert eng.seen_filter.state is not None and eng.seen_filter.rebuilds >= 1
 
-    eng2 = CrawlEngine.resume(spark, pages, ck, use_bloom=True)
-    assert eng2._bloom_bm is not None, "bitmap must come from the checkpoint"
-    assert eng2._bloom_m == eng._bloom_m
-    assert bytes(eng2._bloom_bm) == bytes(eng._bloom_bm)
+    eng2 = CrawlEngine.resume(spark, pages, ck)
+    assert eng2.seen_filter.state is not None, "bitmap must come from the checkpoint"
+    assert eng2.seen_filter.size == eng.seen_filter.size
+    assert bytes(eng2.seen_filter.state) == bytes(eng.seen_filter.state)
     # a post-resume round must NOT rebuild from the full seen-set
     eng2.add_seed("/catalogue/page-1.html")
     eng2.run_round()
-    assert eng2.bloom_rebuilds == 0
+    assert eng2.seen_filter.rebuilds == 0
     # and state still converges to the oracle
     res = crawl_oracle.crawl(pages_map)
     assert {r["canonical"] for r in eng2.seen.collect()} == res.processed
 
 
-def test_bloom_state_restored_on_resume_sharded(spark, pages, pages_map, tmp_path):
+@pytest.mark.parametrize("family", ["bloom", "cuckoo"])
+def test_bloom_state_restored_on_resume_sharded(
+    spark, pages, pages_map, tmp_path, family
+):
     ck = str(tmp_path / "ck")
     eng = CrawlEngine(
-        spark, pages, checkpoint_dir=ck, use_bloom=True, bloom_shard_threshold=1
+        spark, pages, checkpoint_dir=ck, seen_filter=family,
+        bloom_shard_threshold=1,
     )
     eng.run("/catalogue/page-1.html")
-    assert eng._bloom_shards is not None
+    assert eng.seen_filter.sharded
 
     eng2 = CrawlEngine.resume(
-        spark, pages, ck, use_bloom=True, bloom_shard_threshold=1
+        spark, pages, ck, seen_filter=family, bloom_shard_threshold=1
     )
-    assert eng2._bloom_shards is not None, "shard table must come from the checkpoint"
-    assert eng2._bloom_m == eng._bloom_m
+    assert eng2.seen_filter.sharded, "shard table must come from the checkpoint"
+    assert eng2.seen_filter.size == eng.seen_filter.size
     eng2.add_seed("/catalogue/page-1.html")
     eng2.run_round()
-    assert eng2.bloom_rebuilds == 0
+    assert eng2.seen_filter.rebuilds == 0
     res = crawl_oracle.crawl(pages_map)
     assert {r["canonical"] for r in eng2.seen.collect()} == res.processed
 

@@ -396,15 +396,13 @@ def test_sharded_bloom_long_crawl_golden(spark, pages, pages_map):
     host budget stretches the crawl past ~25 rounds, which is where the
     sharded filter state's Catalyst size estimate used to compound
     exponentially (product stats surviving localCheckpoint) until the
-    driver OOMed analyzing a later round — see _pin_shards. The bloom
+    driver OOMed analyzing a later round — see SeenFilter._pin_shards. The bloom
     family shared the latent defect with cuckoo; this pins the fix on the
     bloom side, byte-exact against the oracle."""
-    eng = _run(
-        spark, pages, use_bloom=True, bloom_shard_threshold=1, host_budget=2
-    )
+    eng = _run(spark, pages, bloom_shard_threshold=1, host_budget=2)
     res = crawl_oracle.crawl(pages_map, host_budget=2)
     assert res.rounds > 20, "fixture must exercise the many-round regime"
     assert eng.crawl_order() == res.crawl_order
     assert {r["canonical"] for r in eng.seen.collect()} == res.processed
     assert eng.round_num == res.rounds
-    assert eng._bloom_shards is not None  # sharded path actually ran
+    assert eng.seen_filter.sharded  # sharded path actually ran
